@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark harness: one JSON line `{"metric":"total",...}` per run.
   *
@@ -46,97 +46,50 @@ object Bench {
     "q_vocab_build", "q_weighted_sample", "q_winsorize",
     "q_wordpiece_bytefallback", "q_wordpiece_encode", "q_zorder_key")
 
-  /** Cumulative cluster-wide byte counters, fed by stage-completion
-    * events. Snapshot deltas around a query attribute its shuffle
-    * read/write and scan input volume — the per-round telemetry that
-    * makes "does this operator shuffle more than it must" a recorded
-    * number instead of a plan-reading exercise.
+  /** r15: the ANN stored-index tier's BUILD cost as its own measured
+    * bench row. Probe queries read the warm fingerprint-stamped
+    * artifacts (the build-once/probe-many contract), which left the
+    * one-time centroid/codebook/code-table cost unrecorded; this row
+    * rebuilds ALL of it from raw parquet into a COLD throwaway
+    * artifact root on every pass (memos cleared around it), so the
+    * build is a recorded number while the shared tier the probe
+    * queries read stays untouched. Bench-only: not a declared oracle
+    * query (it writes artifacts; it computes no new query semantics).
     */
-  private final class BytesListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val input = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        input.addAndGet(m.inputMetrics.bytesRead)
+  private def indexBuild(sp: SparkSession, sf: String): DataFrame = {
+    val prevRoot = sys.props.get("graft.artifact.root")
+    val tmp = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"),
+        "index_build_cold_").toString
+    sys.props.put("graft.artifact.root", tmp)
+    graft.ext.VectorOps.clearMemos()
+    try graft.ext.VectorOps.buildIvfPqIndex(sp, sf)
+    finally {
+      prevRoot match {
+        case Some(r) => sys.props.put("graft.artifact.root", r)
+        case None => sys.props.remove("graft.artifact.root")
       }
-    }
-    def snap: (Long, Long, Long) = (shufRead.get, shufWrite.get, input.get)
-    /** Listener events arrive async; wait until the counters stop moving
-      * (bounded) so trailing stages aren't billed to the next query. */
-    def settled: (Long, Long, Long) = {
-      var prev = snap
-      var i = 0
-      while (i < 10) {
-        Thread.sleep(60)
-        val cur = snap
-        if (cur == prev) i = 10 else { prev = cur; i += 1 }
+      graft.ext.VectorOps.clearMemos()
+      // the cold artifacts were already read back and counted
+      // inside buildIvfPqIndex (its output is a local row), so the
+      // throwaway dir can go immediately
+      def rm(f: java.io.File): Unit = {
+        val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
+        f.delete(); ()
       }
-      prev
+      rm(new java.io.File(tmp))
     }
   }
 
+  /** Every bench row by name: the declared queries plus q_ann_index_build. */
+  def rows: Seq[(String, (SparkSession, String) => DataFrame)] =
+    (SparkEntry.queries.toSeq :+ ("q_ann_index_build" -> indexBuild _))
+      .sortBy(_._1)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: run the same bench against a real cluster
-    // manager (the Runner override; default stays local mode)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed fact scans emit per-bucket sort order (Bucketing writes
-      // exactly one file per bucket, which makes this safe) so fact-fact
-      // merge joins run sort-free as well as shuffle-free
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // the events fixture is TIMESTAMP(NANOS) parquet; its reader
-      // requires this mapping and fails loudly if unset (EventOps.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
 
-    // r15: the ANN stored-index tier's BUILD cost as its own measured
-    // bench row. Probe queries read the warm fingerprint-stamped
-    // artifacts (the build-once/probe-many contract), which left the
-    // one-time centroid/codebook/code-table cost unrecorded; this row
-    // rebuilds ALL of it from raw parquet into a COLD throwaway
-    // artifact root on every pass (memos cleared around it), so the
-    // build is a recorded number while the shared tier the probe
-    // queries read stays untouched. Bench-only: not a declared oracle
-    // query (it writes artifacts; it computes no new query semantics).
-    val indexBuildRow: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame) =
-      "q_ann_index_build" -> { (sp: SparkSession, sf: String) =>
-        val prevRoot = sys.props.get("graft.artifact.root")
-        val tmp = java.nio.file.Files
-          .createTempDirectory(java.nio.file.Paths.get("target"),
-            "index_build_cold_").toString
-        sys.props.put("graft.artifact.root", tmp)
-        graft.ext.VectorOps.clearMemos()
-        try graft.ext.VectorOps.buildIvfPqIndex(sp, sf)
-        finally {
-          prevRoot match {
-            case Some(r) => sys.props.put("graft.artifact.root", r)
-            case None => sys.props.remove("graft.artifact.root")
-          }
-          graft.ext.VectorOps.clearMemos()
-          // the cold artifacts were already read back and counted
-          // inside buildIvfPqIndex (its output is a local row), so the
-          // throwaway dir can go immediately
-          def rm(f: java.io.File): Unit = {
-            val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-            f.delete(); ()
-          }
-          rm(new java.io.File(tmp))
-        }
-      }
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query names — run the bench
     // methodology (warmup + cache-cleared medians + bytes telemetry) on a
     // subset, for scaling experiments at bigger SFs where all 244 rows
@@ -144,9 +97,7 @@ object Bench {
     // bit-for-bit the previous contract.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = (SparkEntry.queries.toSeq :+ indexBuildRow)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(_._1)
+    val queries = rows.filter { case (n, _) => only.forall(_.contains(n)) }
 
     // MACHINE CALIBRATION: a fixed synthetic workload (hash-reduce over
     // spark.range — no I/O, no library code, identical every round)
@@ -160,7 +111,7 @@ object Bench {
         val t0 = System.nanoTime()
         // modulo bounds the addend: a 100M-row sum of full-range hashes
         // overflows Long under ANSI mode
-        spark.range(0, 100000000L, 1, cpus.toInt)
+        spark.range(0, 100000000L, 1, Sessions.defaultCpus)
           .select(fsum(xxhash64(col("id")) % 997)).head()
         (System.nanoTime() - t0) / 1e9
       }
@@ -176,8 +127,8 @@ object Bench {
 
     val runsN = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val bytesL = new BytesListener
-    spark.sparkContext.addSparkListener(bytesL)
+    val metrics = new StageMetrics
+    spark.sparkContext.addSparkListener(metrics)
     // per-query (shuffle read, shuffle write, scan input) MB, measured on
     // the final pass only (bytes are plan-determined; the settle wait
     // happens OUTSIDE the timed window and is excluded from timings)
@@ -189,17 +140,16 @@ object Bench {
         // query's timing never pays for (or benefits from) a sibling's cache
         spark.catalog.clearCache()
         val lastRun = run == runsN
-        val before = if (lastRun) bytesL.settled else null
+        val before = if (lastRun) metrics.settled else null
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
           if (lastRun) {
-            val after = bytesL.settled
-            def mb(a: Long, b: Long) =
-              math.round((a - b) / 1e6 * 10) / 10.0
-            bytesMb += name -> ((mb(after._1, before._1),
-              mb(after._2, before._2), mb(after._3, before._3)))
+            val st = metrics.since(before)._2
+            def mb(f: StageStat => Long) = StageMetrics.mb(st.map(f).sum)
+            bytesMb += name -> ((mb(_.shuffleReadBytes),
+              mb(_.shuffleWriteBytes), mb(_.scanBytes)))
           }
           name -> dt
         } catch {
@@ -217,12 +167,10 @@ object Bench {
     val results = queries.map { case (name, _) =>
       name -> median(perRun.map(_(name)))
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }
+    val qs = results.map { case (k, v) => s"${Json.str(k)}:$v" }
+      .mkString("{", ",", "}")
+    val errJson = errors
+      .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // artifact_tier: whether telemetry/lifecycle queries read the
@@ -236,7 +184,7 @@ object Bench {
     // scan_input_mb] — the shuffle-volume telemetry beside each timing
     val bytesJson = results.map { case (k, _) =>
       val (r, w, in) = bytesMb.getOrElse(k, (0.0, 0.0, 0.0))
-      s"${q(k)}:[$r,$w,$in]"
+      s"${Json.str(k)}:[$r,$w,$in]"
     }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"runs":$runsN,"artifact_tier":${graft.io.Artifacts.sharedTier},"subset":$subsetJson,"bytes_mb":$bytesJson,"calib_sec":$calib,"sf":"$sfDir"}"""

@@ -1,40 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** Ad-hoc per-query timing: `runMain graft.Time <sfDir> <query> [query...]`.
-  * Dev tool for isolating bench regressions; BENCH numbers come from Bench.
-  */
-object Time {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed fact scans emit per-bucket sort order (Bucketing writes
-      // exactly one file per bucket, which makes this safe) so fact-fact
-      // merge joins run sort-free as well as shuffle-free
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // the events fixture is TIMESTAMP(NANOS) parquet; its reader
-      // requires this mapping and fails loudly if unset (EventOps.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // A/B hook for the optimizer-rule measurements (SURVEY §8.24):
-    // SPARK_GRAFT_TOPK_REWRITE=false times the vanilla window plans.
-    sys.env.get("SPARK_GRAFT_TOPK_REWRITE").foreach(v =>
-      spark.conf.set("spark.graft.topkRewrite.enabled", v))
-    args.tail.foreach { name =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
-      println(f"TIMED $name rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    }
-    spark.stop()
-  }
-}
 
 /** A/B for the TopKRewriteRule in the LARGE-GROUP regime the heap
   * operator exists for: top-k sales per ORDER_STATUS (a handful of
@@ -49,15 +13,7 @@ object TimeTopK {
     import org.apache.spark.sql.functions._
     val sfDir = args.head
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
     val sales = graft.retail.Retail.sales(spark, sfDir)
       .select("ORDER_STATUS", "SALE_ID", "QUANTITY")
     def query = sales
@@ -90,15 +46,7 @@ object TimeTopK {
 object TimeBpe {
   def main(args: Array[String]): Unit = {
     val maxBudget = args.headOption.map(_.toInt).getOrElse(8192)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.get()
     import spark.implicits._
     // 120 consonant-vowel syllables -> all ordered pairs (14.4k
     // 2-syllable words, one word-level merge each once the 120
@@ -123,7 +71,8 @@ object TimeBpe {
       } yield (a + b + syl((i * 7 + j * 13) % 120),
                ((i * 13 + j) % 11 + 1).toLong))
     println(s"BPE_CURVE corpus: ${words.size} distinct words")
-    val df = words.toDF("w", "f").repartition(cpus.toInt).persist()
+    val df = words.toDF("w", "f").repartition(Sessions.defaultCpus)
+      .persist()
     df.count()
     var budget = 1024
     while (budget <= maxBudget) {

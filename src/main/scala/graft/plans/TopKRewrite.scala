@@ -41,7 +41,10 @@ import org.apache.spark.sql.internal.SQLConf
   * `maxKeysPerPartition` cap still applies). `spark.graft.topkRewrite
   * .maxK` (default 1000) refuses huge-k rewrites where the sort-based
   * window form's spilling is the right behavior;
-  * `spark.graft.topkRewrite.enabled=false` is the kill switch.
+  * `spark.graft.topkRewrite.enabled=false` is the kill switch, per
+  * session (`spark.conf.set`) or per run (`spark-submit --conf
+  * spark.graft.topkRewrite.enabled=false`, or the same key as a
+  * `-Dspark.*` system property).
   *
   * Tie caveat (same contract as vanilla): when the ordering is not total,
   * `row_number` assigns tied rows arbitrarily in EITHER formulation

@@ -10,16 +10,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.plans.GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.get(cpus = 4)
+
+  /** A fresh [[Sessions]] session sharing the suite's context (settings
+    * and extensions only apply at session construction, so getOrCreate on
+    * the existing default would silently skip them — clear, build,
+    * restore).
+    */
+  def withFreshSession[A](cpus: Int)(f: SparkSession => A): A = {
+    spark // built first, so the restore below cannot pick up the fresh one
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f(Sessions.get(cpus))
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (Test / fork := true gives

@@ -1,35 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkSpec
 
 class GraftExtensionsSpec extends SparkSpec {
 
-  /** A session built WITH the extensions, sharing the suite's context
-    * (extensions only apply at session construction, so getOrCreate on
-    * the existing default would silently skip them — clear, build,
-    * restore).
-    */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 2)
-        .withExtensions(new GraftExtensions)
-        .appName("graft-ext-test")
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("native functions are SQL-callable via session extensions") {
-    withExtSession { s =>
+    withFreshSession(cpus = 2) { s =>
       val cos = s.sql(
         "SELECT cosine_similarity(array(1.0d, 2.0d), array(1.0d, 2.0d)) AS c")
         .collect().head.getDouble(0)
@@ -71,7 +47,7 @@ class GraftExtensionsSpec extends SparkSpec {
     val viaCol = Seq("the quick brown fox").toDF("t")
       .select(graft.functions.SimHash64(split(col("t"), " ")).as("h"))
       .as[Long].collect().head
-    val viaSql = withExtSession { s =>
+    val viaSql = withFreshSession(cpus = 2) { s =>
       s.sql("SELECT simhash64(split('the quick brown fox', ' ')) AS h")
         .collect().head.getLong(0)
     }

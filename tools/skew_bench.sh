@@ -28,17 +28,20 @@ q_lang_id"
 [ -f "$K/documents.parquet" ] || \
   python3 "$REPO/tools/make_skew.py" "$U" "$K"
 
-run() { # $1 = dir, $2 = log — COLD first runs, fresh JVM per twin
+run() { # $1 = dir, $2 = log, $3 = profile dir — COLD first runs, fresh
+  # JVM per twin (Profile also clears the cache before every query)
   SPARK_GRAFT_CPUS=16 SPARK_GRAFT_REPO=$REPO \
   /opt/spark/bin/spark-submit --master 'local[16]' --driver-memory 16g \
-    --class graft.Time "$JAR" "$1" $QUERIES > "$2" 2>&1
+    --class graft.Profile "$JAR" "$1" "$3" $QUERIES > "$2" 2>&1
   grep "^TIMED" "$2"
 }
 
 echo "== uniform twin"
-run "$U" "$REPO/target/skew_u.log" | tee /tmp/skew_u.txt
+run "$U" "$REPO/target/skew_u.log" "$REPO/target/skew_profile_u" \
+  | tee /tmp/skew_u.txt
 echo "== mega-key twin"
-run "$K" "$REPO/target/skew_k.log" | tee /tmp/skew_k.txt
+run "$K" "$REPO/target/skew_k.log" "$REPO/target/skew_profile_k" \
+  | tee /tmp/skew_k.txt
 
 python3 - "$OUT" <<'EOF'
 import json, re, sys
